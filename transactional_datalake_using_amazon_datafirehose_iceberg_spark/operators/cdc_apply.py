@@ -28,8 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.lake_table import LakeTable
-from ..plans.merge import merge_into
+from ..plans.lake_table import KEY_LIST_CAP, CommitConflict, LakeTable
+from ..plans.merge import key_stat_aggs, key_stats_of, merge_into
 from ..schemas import CDC_DATA_RETAIL
 
 
@@ -210,18 +210,17 @@ def apply_batch(
         # split dropping it from BOTH sides
         is_del = F.coalesce(F.col("operation") == "delete", F.lit(False))
 
-        # merge-on-read CDC: route the batch's deletes to a position-
-        # delete file (O(deleted rows) written) instead of a copy-on-
-        # write file rewrite — bounded write amplification for delete-
-        # heavy streams (reference tables run merge-on-read,
-        # README.md:307). Upserts still MERGE copy-on-write. Keys are
-        # disjoint (D4 collapsed per key), so the two commits cannot
-        # conflict; the watermark stamps the final one.
-        # NOT taken under the stale guard: a position-delete commit has
-        # no newer-than-current check, so a replayed older batch's
-        # delete would silently remove a newer row image — those deletes
-        # go through the gated MERGE below instead (correctness over
-        # write amplification).
+        # merge-on-read CDC: the batch's deletes become a position-delete
+        # file (O(deleted rows) written) instead of a copy-on-write file
+        # rewrite — bounded write amplification for delete-heavy streams
+        # (reference tables run merge-on-read, README.md:307) — and that
+        # file commits in the upsert MERGE's snapshot with the watermark,
+        # so a reader never sees half a delivery buffer.
+        # NOT taken under the stale guard: a position delete has no
+        # newer-than-current check, so a replayed older batch's delete
+        # would silently remove a newer row image — those deletes go
+        # through the gated MERGE below instead (correctness over write
+        # amplification).
         props = table.manifest().get("properties", {})
         # (hasattr guard: a real-Iceberg backend handles merge-on-read
         # natively inside MERGE INTO, no position-delete routing needed)
@@ -230,36 +229,7 @@ def apply_batch(
             and not stale_guard
             and hasattr(table, "delete_by_keys_mor")
         ):
-            from ..plans.lake_table import CommitConflict
-            from ..plans.merge import source_key_stats
-
-            deletes = latest.filter(is_del)
-            # one fused aggregate answers "any deletes?" AND the key
-            # range for manifest pruning (was two separate jobs per
-            # micro-batch); shared with merge_into so the pruning
-            # contract (rangeable dtypes, NULL-key pruning disable)
-            # cannot drift
-            preds, n_deletes = source_key_stats(deletes, keys)
-            if n_deletes > 0:
-                try:
-                    table.delete_by_keys_mor(
-                        typed.sparkSession,
-                        deletes.select(*keys),
-                        keys,
-                        predicates=preds,
-                    )
-                except CommitConflict:
-                    # a concurrent commit (compaction) moved the head
-                    # between plan and commit: RE-RUN, never blind-retry
-                    # — the (file, pos) tuples were computed against the
-                    # old snapshot (merge_into's one-re-plan shape)
-                    table.delete_by_keys_mor(
-                        typed.sparkSession,
-                        deletes.select(*keys),
-                        keys,
-                        predicates=preds,
-                    )
-            latest = latest.filter(~is_del)
+            return _apply_row_delta(table, latest, keys, is_del, extra_summary)
 
         return merge_into(
             table,
@@ -300,6 +270,71 @@ def apply_batch(
         )
     finally:
         cached.unpersist()
+
+
+def _apply_row_delta(
+    table: LakeTable,
+    latest: DataFrame,
+    keys: list[str],
+    is_del,
+    extra_summary: dict | None,
+) -> int:
+    """Merge-on-read apply of one collapsed micro-batch as ONE snapshot
+    (Iceberg ``RowDelta``): the deletes are staged as a position-delete
+    file that commits with the upsert MERGE's data files.
+
+    One collect over the persisted batch sizes both halves (row count
+    and key range, for manifest pruning) and lists the delete keys the
+    candidate scan filters by, up to ``KEY_LIST_CAP``. Keys are disjoint
+    between the halves (D4 collapsed per key), so the MERGE never
+    matches a deleted key; it only drops staged positions from a file it
+    happens to rewrite. A commit that loses to a concurrent commit
+    (compaction) re-plans the whole batch once: the staged (file, pos)
+    tuples were computed against the old head (merge_into's one-re-plan
+    shape). The losing attempt's files are reaped by the orphan sweep."""
+    upserts = latest.filter(~is_del).drop("_order_ts", "_order_txn")
+    deletes = latest.filter(is_del).select(*keys)
+    aggs = key_stat_aggs(latest, keys, is_del, "_d") + key_stat_aggs(
+        latest, keys, ~is_del, "_u"
+    )
+    if len(keys) == 1:
+        aggs.append(
+            F.slice(
+                F.collect_list(F.when(is_del, F.col(keys[0]))), 1, KEY_LIST_CAP + 1
+            ).alias("__dkeys")
+        )
+    row = latest.agg(*aggs).collect()[0]
+    n_del, del_preds = key_stats_of(row, latest, keys, "_d")
+    n_up, up_preds = key_stats_of(row, latest, keys, "_u")
+    # collect_list skips NULL keys: the list is usable only when complete
+    # (keys are distinct after D4)
+    key_values = row["__dkeys"] if len(keys) == 1 else None
+    if key_values is not None and len(key_values) != n_del:
+        key_values = None
+
+    def attempt() -> int:
+        staged = (
+            table.stage_key_deletes(
+                latest.sparkSession, deletes, keys, del_preds, key_values
+            )
+            if n_del
+            else None
+        )
+        return merge_into(
+            table,
+            upserts,
+            on=keys,
+            op_col="operation",
+            assume_unique=True,  # D4 just guaranteed it
+            extra_summary=extra_summary,
+            source_stats=(n_up, up_preds),
+            staged_deletes=[staged] if staged else [],
+        )
+
+    try:
+        return attempt()
+    except CommitConflict:
+        return attempt()
 
 
 def apply_routed(

@@ -61,6 +61,7 @@ _COMMIT_TL = _threading.local()
 from dataclasses import dataclass
 from typing import Any, Iterable
 
+import pyarrow as _pa
 import pyarrow.parquet as _pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,6 +71,13 @@ _SNAPSHOT_DIR = "_snapshots"
 _CURRENT = "_current"
 _DATA_DIR = "data"
 _REFS_DIR = "refs"
+# most distinct delete keys a merge-on-read key delete brings to the
+# Spark driver to filter and prune its candidate scan by; a larger key
+# set runs a broadcast semi-join instead
+KEY_LIST_CAP = 10_000
+# the (file, pos) layout of a position-delete file; ``file`` holds
+# ROOT-RELATIVE data-file paths
+_POS_DELETE_SCHEMA = _pa.schema([("file", _pa.string()), ("pos", _pa.int64())])
 # tombstone lineage of expired snapshots (version -> parent), at the
 # table root so snapshot-dir walkers never see it
 _LINEAGE_FILE = "_lineage.json"
@@ -1539,7 +1547,6 @@ class LakeTable:
         drop. Only a straddling delete file (some refs removed, some
         live) is rewritten — driver-side pyarrow, fine because position
         deletes are metadata-scale (ids, not rows)."""
-        import pyarrow as _pa
         import pyarrow.compute as _pc
 
         out: list[dict] = []
@@ -1553,19 +1560,11 @@ class LakeTable:
                 continue  # fully dangling -> drop the entry
             tbl = _pq.read_table(os.path.join(self.root, d["path"]))
             live_arr = _pa.array(sorted(live_refs), type=_pa.string())
-            kept_tbl = tbl.filter(_pc.is_in(tbl.column("file"), value_set=live_arr))
-            new_rel = os.path.join(
-                _DATA_DIR, f"del-{uuid.uuid4().hex[:16]}.parquet"
+            kept = self._write_delete_table(
+                tbl.filter(_pc.is_in(tbl.column("file"), value_set=live_arr))
             )
-            _pq.write_table(kept_tbl, os.path.join(self.root, new_rel))
-            out.append(
-                {
-                    "path": new_rel,
-                    "rows": kept_tbl.num_rows,
-                    "bytes": os.path.getsize(os.path.join(self.root, new_rel)),
-                    "refs": sorted(live_refs),
-                }
-            )
+            if kept is not None:
+                out.append(kept)
         return out
 
     def append(self, df: DataFrame) -> int:
@@ -1978,12 +1977,17 @@ class LakeTable:
         version: int | None = None,
         with_file_path: bool = False,
         with_row_ids: bool = False,
+        staged_deletes: list[dict] = (),
     ) -> DataFrame:
         """Delete-aware read of SPECIFIC data files of a snapshot — the
         read every copy-on-write rewrite (merge/update/delete/compact)
         must use, or it would resurrect rows deleted by pending
-        merge-on-read delete files."""
+        merge-on-read delete files. ``staged_deletes``: position-delete
+        entries written but not yet committed (``stage_key_deletes``),
+        applied on top of the snapshot's own."""
         m = self.manifest(version)
+        if staged_deletes:
+            m = {**m, "delete_files": [*m.get("delete_files", []), *staged_deletes]}
         df = self._scan(
             spark, paths, m,
             extra_fields=[self._ROW_ID_FIELD] if with_row_ids else None,
@@ -2348,13 +2352,9 @@ class LakeTable:
         m = self.manifest()
         df = self._scan(spark, cand, m)
         df = self._apply_position_deletes(spark, df, m)
-        hits = (
-            df.filter(condition)
-            .select(
-                self._rel_file_col(df).alias("file"),
-                self._row_index_col(df).alias("pos"),
-            )
-            .orderBy("file", "pos")
+        hits = df.filter(condition).select(
+            self._rel_file_col(df).alias("file"),
+            self._row_index_col(df).alias("pos"),
         )
         meta = self._write_delete_file(hits)
         if meta is None:
@@ -2374,74 +2374,24 @@ class LakeTable:
         predicates: list[Predicate] | None = None,
         extra_summary: dict | None = None,
     ) -> int:
-        """Merge-on-read DELETE by key set — the CDC delete path: rows
-        whose key appears in ``keys_df`` get their (file, pos) recorded
-        in a position-delete file; no data file is rewritten. The key set
-        is broadcast (a micro-batch's delete keys are tiny next to the
-        table)."""
+        """Merge-on-read DELETE by key set: rows whose key appears in
+        ``keys_df`` get their (file, pos) recorded in a position-delete
+        file, committed as its own snapshot; no data file is rewritten.
+        The CDC apply stages the same file with ``stage_key_deletes``
+        but commits it together with the batch's upserts instead."""
         keys = keys or self.keys
-        # single-column key sets are micro-batch scale (they broadcast
-        # below anyway): collect them once and let the per-file key
-        # bloom + min/max prune the candidate scan down to files that
-        # may actually hold a doomed row — the point-lookup pruning this
-        # delete path exists for
-        extra_preds: list[Predicate] = []
-        has_null_key = False
+        key_values = None
         if len(keys) == 1:
-            kvals = [
-                r[0] for r in keys_df.select(keys[0]).distinct().limit(10001).collect()
+            # micro-batch scale: at most KEY_LIST_CAP + 1 values reach
+            # the Spark driver (more than the cap means "do not list them")
+            key_values = [
+                r[0]
+                for r in keys_df.select(keys[0]).distinct()
+                .limit(KEY_LIST_CAP + 1).collect()
             ]
-            # blooms and min/max stats exclude NULLs: a NULL-key delete
-            # row would prune away the very file holding the NULL-key
-            # target, so ANY null in the batch disables pruning (and the
-            # semi-join below goes null-safe) — the same null contract
-            # as merge_into's probe
-            has_null_key = any(v is None for v in kvals)
-            kvals = [v for v in kvals if v is not None]
-            if 0 < len(kvals) <= 10000 and not has_null_key:
-                extra_preds = [Predicate(keys[0], "in", tuple(kvals))]
-        cand = self.file_paths(
-            predicates=None if has_null_key else [*(predicates or []), *extra_preds]
-        )
-        if not cand:
-            return self.current_version()
-        m = self.manifest()
-        # materialize (file, pos) into plain columns straight off the
-        # scan — the hidden _metadata column does not survive joins —
-        # under reserved __-names so a key/schema column named file/pos
-        # cannot collide
-        scan = self._scan(spark, cand, m)
-        df = scan.select(
-            *[F.col(k) for k in keys],
-            self._rel_file_col(scan).alias("__file"),
-            self._row_index_col(scan).alias("__pos"),
-        )
-        # position-delete files ONLY: an equality-delete parquet's
-        # columns are the eq key tuple, not (file, pos) — reading it
-        # under this schema is wasted I/O at best and misread positions
-        # at worst (same kind filter as _apply_position_deletes)
-        dels = [
-            d for d in m.get("delete_files", [])
-            if d.get("kind") != "equality"
-        ]
-        if dels:
-            del_paths = [os.path.join(self.root, d["path"]) for d in dels]
-            existing = spark.read.schema("file string, pos long").parquet(*del_paths).select(
-                F.col("file").alias("__file"), F.col("pos").alias("__pos")
-            )
-            df = df.join(F.broadcast(existing), ["__file", "__pos"], "left_anti")
-        # null-safe semi-join (t.k <=> s.k): a NULL-key delete must hit
-        # the NULL-key row, matching the COW path's MERGE semantics
-        probe = keys_df.select(
-            *[F.col(k).alias(f"__d_{k}") for k in keys]
-        ).distinct()
-        cond = [F.col(k).eqNullSafe(F.col(f"__d_{k}")) for k in keys]
-        hits = (
-            df.join(F.broadcast(probe), on=cond, how="left_semi")
-            .select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
-            .orderBy("file", "pos")
-        )
-        meta = self._write_delete_file(hits)
+            if not key_values:
+                return self.current_version()
+        meta = self.stage_key_deletes(spark, keys_df, keys, predicates, key_values)
         if meta is None:
             return self.current_version()
         return self.commit(
@@ -2451,13 +2401,128 @@ class LakeTable:
             extra_summary={"delete_mode": "merge-on-read", **(extra_summary or {})},
         )
 
+    def stage_key_deletes(
+        self,
+        spark: SparkSession,
+        keys_df: DataFrame,
+        keys: list[str],
+        predicates: list[Predicate] | None = None,
+        key_values: list | None = None,
+    ) -> dict | None:
+        """Write, but do not commit, the position-delete file for the
+        live rows whose key appears in ``keys_df``; returns its manifest
+        entry, or None when no live row matches. A crash before the
+        commit leaves an unreferenced file for the orphan sweep of
+        ``maintenance.expire_snapshots``.
+
+        ``key_values``: the distinct values of a single key, when the
+        caller holds them (None: composite key, or not listed). A list
+        of at most ``KEY_LIST_CAP`` values without a NULL prunes the
+        candidate files by bloom and min/max and, for an integer key,
+        filters the scan with an IN list. Every other key set (composite,
+        NULL-bearing, over the cap, non-integer) runs a null-safe
+        broadcast semi-join against ``keys_df``, so a NULL-key delete
+        hits the NULL-key row as the copy-on-write MERGE does. A NULL in
+        the list disables all file pruning: blooms and min/max exclude
+        NULLs and would skip the very file holding the NULL-key row.
+
+        The hits reach the Spark driver in one ``toArrow()``: they are
+        bounded by the delete keys, not by the table. Positions a live
+        delete file already holds are dropped, so the delete set stays
+        duplicate-free and ``row_count`` stays exact."""
+        has_null_key = key_values is not None and any(v is None for v in key_values)
+        listed = (
+            key_values is not None
+            and not has_null_key
+            and 0 < len(key_values) <= KEY_LIST_CAP
+        )
+        preds = None
+        if not has_null_key:
+            preds = [*(predicates or [])]
+            if listed:
+                preds.append(Predicate(keys[0], "in", tuple(key_values)))
+        cand = self.file_paths(predicates=preds)
+        if not cand:
+            return None
+        m = self.manifest()
+        # (file, pos) come straight off the scan (the hidden _metadata
+        # column does not survive joins) under reserved __-names, so a
+        # key or schema column named file/pos cannot collide
+        scan = self._scan(spark, cand, m)
+        df = scan.select(
+            *[F.col(k) for k in keys],
+            self._rel_file_col(scan).alias("__file"),
+            self._row_index_col(scan).alias("__pos"),
+        )
+        if listed and dict(df.dtypes)[keys[0]] in (
+            "tinyint", "smallint", "int", "bigint"
+        ):
+            # SQL text, not Column.isin: isin pays one py4j round trip
+            # per literal (~0.4 ms each), and an integer renders exactly
+            col = "`" + keys[0].replace("`", "``") + "`"
+            df = df.filter(
+                F.expr(f"{col} IN ({', '.join(str(int(v)) for v in key_values)})")
+            )
+        else:
+            probe = keys_df.select(
+                *[F.col(k).alias(f"__d_{k}") for k in keys]
+            ).distinct()
+            cond = [F.col(k).eqNullSafe(F.col(f"__d_{k}")) for k in keys]
+            df = df.join(F.broadcast(probe), on=cond, how="left_semi")
+        hits = (
+            df.select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
+            .toArrow()
+            .cast(_POS_DELETE_SCHEMA)
+        )
+        if hits.num_rows == 0:
+            return None
+        # position-delete files ONLY: an equality-delete parquet holds
+        # key tuples, not (file, pos)
+        hit_files = set(hits.column("file").to_pylist())
+        live = [
+            os.path.join(self.root, d["path"])
+            for d in m.get("delete_files", [])
+            if d.get("kind") != "equality"
+            and ("refs" not in d or hit_files & set(d["refs"]))
+        ]
+        if live:
+            done = _pa.concat_tables([
+                _pq.read_table(p, columns=["file", "pos"]).cast(_POS_DELETE_SCHEMA)
+                for p in live
+            ])
+            hits = hits.join(done, keys=["file", "pos"], join_type="left anti")
+        return self._write_delete_table(
+            hits.sort_by([("file", "ascending"), ("pos", "ascending")])
+        )
+
+    def _write_delete_table(self, tbl) -> dict | None:
+        """Write a (file, pos) pyarrow table held in the Spark driver as
+        one position-delete file; returns its manifest entry (``refs`` = the
+        distinct data files it covers) or None when empty."""
+        if tbl.num_rows == 0:
+            return None
+        rel = os.path.join(_DATA_DIR, f"del-{uuid.uuid4().hex[:16]}.parquet")
+        full = os.path.join(self.root, rel)
+        _pq.write_table(tbl.select(["file", "pos"]), full)
+        return {
+            "path": rel,
+            "rows": tbl.num_rows,
+            "bytes": os.path.getsize(full),
+            "refs": sorted(set(tbl.column("file").to_pylist())),
+        }
+
     def _write_delete_file(self, dels: DataFrame) -> dict | None:
         """Write a position-delete DataFrame (file string, pos long; the
-        ``file`` values are ROOT-RELATIVE) as a single parquet file;
-        returns its manifest entry (with ``refs`` = the distinct data
-        files it covers) or None when empty."""
+        ``file`` values are ROOT-RELATIVE) as a single parquet file
+        sorted by (file, pos); returns its manifest entry (with ``refs``
+        = the distinct data files it covers) or None when empty. For a
+        hit count with no bound (``DELETE WHERE``): the rows stay on the
+        executors, one partition sorted locally — a global orderBy would
+        add a range-sampling job to produce the same single file."""
         commit_dir = os.path.join(self.root, _DATA_DIR, f"del-{uuid.uuid4().hex[:16]}")
-        dels.coalesce(1).write.mode("errorifexists").parquet(commit_dir)
+        dels.repartition(1).sortWithinPartitions("file", "pos").write.mode(
+            "errorifexists"
+        ).parquet(commit_dir)
         part = None
         for name in sorted(os.listdir(commit_dir)):
             if name.endswith(".parquet"):

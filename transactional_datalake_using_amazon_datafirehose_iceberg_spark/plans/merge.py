@@ -24,9 +24,11 @@ Physical strategy (the 100 TB story):
    the source (shuffle bounded by touched-file volume, not table volume).
 3. Untouched files carry over into the new snapshot by reference.
 
-This is exactly Iceberg's copy-on-write MERGE; the alternative
-merge-on-read (delete files) is traded away for read speed, matching the
-reference's compaction-threshold choice (README.md:307).
+This is exactly Iceberg's copy-on-write MERGE. On a merge-on-read
+table the CDC apply (operators/cdc_apply.py) routes a batch's deletes
+to a position-delete file instead and hands it to this MERGE as
+``staged_deletes``: the upserts and the deletes commit as one snapshot
+(Iceberg ``RowDelta``).
 """
 
 from __future__ import annotations
@@ -67,6 +69,8 @@ def merge_into(
     condition_gates_delete: bool = False,
     not_matched_by_source_delete: bool = False,
     not_matched_by_source_update: dict[str, str] | None = None,
+    source_stats: tuple[int, list[Predicate]] | None = None,
+    staged_deletes: list[dict] | None = None,
 ) -> int:
     """MERGE ``source`` into ``table`` by key columns ``on``.
 
@@ -112,6 +116,21 @@ def merge_into(
     cost shape as the delete variant (any file may hold an unmatched
     row). Mutually exclusive with ``not_matched_by_source_delete`` —
     a row cannot both vanish and be updated.
+
+    ``source_stats``: ``(row count, key-range predicates)`` of
+    ``source``, from a pass over it the caller already made
+    (``key_stat_aggs`` / ``key_stats_of``); with ``assume_unique`` it
+    replaces the MERGE's own source aggregate job.
+
+    ``staged_deletes``: position-delete entries written but not
+    committed (``LakeTable.stage_key_deletes``) that commit in the same
+    snapshot as the MERGE's data files. A rewritten file drops their
+    positions, and their refs to it are pruned before the commit. They
+    were planned against the head the caller read, so whenever the
+    argument is given (even empty) a lost commit race is raised to the
+    caller, which re-plans deletes and upserts together, instead of
+    being re-planned here. Not supported by the native
+    Iceberg backend, which runs its own merge-on-read inside MERGE INTO.
     """
     if not_matched_by_source_update and not_matched_by_source_delete:
         raise ValueError(
@@ -145,6 +164,8 @@ def merge_into(
     # CDC schema-drift story to the LakeTable backend — sql_merge runs
     # generated ALTER TABLE statements before the MERGE instead).
     if hasattr(table, "sql_merge"):
+        if staged_deletes:
+            raise ValueError("staged_deletes needs a LakeTable target")
         return table.sql_merge(
             source,
             on=on,
@@ -170,24 +191,23 @@ def merge_into(
     # snapshot expiry.
     from .lake_table import CommitConflict
 
+    args = (
+        table, source, on, op_col, delete_value, assume_unique,
+        broadcast_source, extra_summary, evolve_schema, evolve_ignore,
+        match_condition, update_cols, condition_gates_delete,
+        not_matched_by_source_delete, not_matched_by_source_update,
+        source_stats, staged_deletes,
+    )
     try:
-        return _merge_into_cow(
-            table, source, on, op_col, delete_value, assume_unique,
-            broadcast_source, extra_summary, evolve_schema, evolve_ignore,
-            match_condition, update_cols, condition_gates_delete,
-            not_matched_by_source_delete, not_matched_by_source_update,
-        )
+        return _merge_into_cow(*args)
     except CommitConflict:
+        if staged_deletes is not None:
+            raise  # the caller re-plans the staged deletes too
         # evolve_schema is passed through unchanged: column evolution is
         # idempotent (the evolve loop skips columns that already exist),
         # and hardcoding False here would silently drop new source
         # columns when the conflict raced the add-column commits
-        return _merge_into_cow(
-            table, source, on, op_col, delete_value, assume_unique,
-            broadcast_source, extra_summary, evolve_schema, evolve_ignore,
-            match_condition, update_cols, condition_gates_delete,
-            not_matched_by_source_delete, not_matched_by_source_update,
-        )
+        return _merge_into_cow(*args)
 
 
 def _merge_into_cow(
@@ -206,6 +226,8 @@ def _merge_into_cow(
     condition_gates_delete: bool,
     not_matched_by_source_delete: bool = False,
     not_matched_by_source_update: dict[str, str] | None = None,
+    source_stats: tuple[int, list[Predicate]] | None = None,
+    staged_deletes: list[dict] | None = None,
 ) -> int:
     spark = source.sparkSession
     keys = on or table.keys
@@ -269,17 +291,11 @@ def _merge_into_cow(
     key_preds: list[Predicate] = []
     range_key = _rangeable_key(src, keys)
     src_rows: int | None = None  # rides the fused agg; sizes the write
-    # NULL-key flag rides the same fused aggregate: min/max stats ignore
-    # NULLs, so a source batch carrying a NULL range key must disable
-    # stats pruning (a null-key target file would otherwise be skipped
-    # and the null-safe rewrite never sees its row — duplicate insert)
-    null_rk = (
-        F.max(F.when(F.col(range_key).isNull(), 1).otherwise(0)).alias("__nrk")
-        if range_key
-        else None
-    )
     src_obs = None
-    if assume_unique:
+    if assume_unique and source_stats is not None:
+        # the caller's own pass over this source already answered it
+        src_rows, key_preds = source_stats
+    elif assume_unique:
         # dedup already guaranteed (D4): plain min/max agg, no groupBy
         # shuffle. Composite/unordered keys have no fused stats aggregate
         # to ride, and the old dedicated isEmpty() probe was one extra
@@ -294,50 +310,49 @@ def _merge_into_cow(
         if not range_key:
             from pyspark.sql import Observation
 
-            stats = [{"__lo": None}]
             src_obs = Observation()
             src = src.observe(src_obs, F.count(F.lit(1)).alias("__n"))
         else:
-            stats = src.agg(
-                F.min(range_key).alias("__lo"),
-                F.max(range_key).alias("__hi"),
-                F.count(F.lit(1)).alias("__n"),
-                null_rk,
-            ).collect()
-            src_rows = stats[0]["__n"]
+            row = src.agg(*key_stat_aggs(src, keys)).collect()[0]
+            src_rows, key_preds = key_stats_of(row, src, keys)
     else:
         # aliased count, never .count(): a key column literally named
         # "count" made the downstream max/sum references ambiguous
         # (review round 12)
         aggs = [F.max("__cnt").alias("__mx"), F.sum("__cnt").alias("__n")]
         if range_key:
-            aggs += [
-                F.min(range_key).alias("__lo"),
-                F.max(range_key).alias("__hi"),
-                null_rk,
-            ]
-        stats = (
+            aggs += key_stat_aggs(src, keys)[1:]  # min/max/NULL flag
+        row = (
             src.groupBy(*keys)
             .agg(F.count(F.lit(1)).alias("__cnt"))
             .agg(*aggs)
-            .collect()
+            .collect()[0]
         )
-        src_rows = stats[0]["__n"] or 0
-        if stats[0]["__mx"] is not None and stats[0]["__mx"] > 1:
+        src_rows, key_preds = key_stats_of(row, src, keys)
+        if row["__mx"] is not None and row["__mx"] > 1:
             raise MergeSourceNotUnique(
                 f"MERGE source has duplicate keys on {keys}; run latest-per-key "
                 "dedup (cdc_apply.collapse_latest_per_key) first"
             )
-    stat0 = stats[0].asDict() if hasattr(stats[0], "asDict") else stats[0]
-    if (
-        range_key
-        and stat0["__lo"] is not None
-        and not stat0.get("__nrk")
-    ):
-        key_preds = [
-            Predicate(range_key, ">=", stat0["__lo"]),
-            Predicate(range_key, "<=", stat0["__hi"]),
-        ]
+
+    def commit(added: list[dict], touched: list[str] = ()) -> int:
+        # RowDelta: the staged deletes ride this commit. A rewritten
+        # (touched) file already dropped their positions, so their refs
+        # to it are pruned here; committing them would dangle.
+        dels = list(staged_deletes or [])
+        if touched and dels:
+            dels = table._prune_dangling_deletes(dels, set(touched))
+        summary = {"matched_files": len(touched), **(extra_summary or {})}
+        if dels:
+            summary["delete_mode"] = "merge-on-read"
+        return table.commit(
+            added,
+            removed_paths=touched,
+            # a batch of deletes only is a delete commit, as it reads
+            operation="merge" if added or touched or not dels else "delete",
+            extra_summary=summary,
+            added_deletes=dels or None,
+        )
 
     # ---- empty-batch early exit ------------------------------------------
     # a zero-row source (idle streaming trigger) must not probe-scan the
@@ -349,12 +364,9 @@ def _merge_into_cow(
         and not not_matched_by_source_delete
         and not not_matched_by_source_update
     ):
-        if extra_summary is None:
+        if extra_summary is None and not staged_deletes:
             return table.current_version()
-        return table.commit(
-            [], operation="merge",
-            extra_summary={"matched_files": 0, **extra_summary},
-        )
+        return commit([])
 
     # NULL op value (malformed CDC metadata) must read as "not a
     # delete", never as three-valued NULL: an un-coalesced NULL gate
@@ -441,12 +453,9 @@ def _merge_into_cow(
             # unhinted)
             src_rows = _observed_rows(src_obs, src)
             if src_rows == 0:
-                if extra_summary is None:
+                if extra_summary is None and not staged_deletes:
                     return table.current_version()
-                return table.commit(
-                    [], operation="merge",
-                    extra_summary={"matched_files": 0, **extra_summary},
-                )
+                return commit([])
 
     # rough in-parquet volume of the source rows (sizes the clustered
     # write shuffle; order-of-magnitude is all the hint needs — the
@@ -472,25 +481,29 @@ def _merge_into_cow(
                 src_rows == 0
                 and not added
                 and extra_summary is None
+                and not staged_deletes
                 and not not_matched_by_source_delete
                 and not not_matched_by_source_update
             ):
                 return table.current_version()
-        return table.commit(
-            added,
-            operation="merge",
-            extra_summary={"matched_files": 0, **(extra_summary or {})},
-        )
+        return commit(added)
 
     # ---- 4. rewrite touched files via full-outer join --------------------
     import os
 
     touched_abs = [os.path.join(table.root, p) for p in touched_rel]
     # delete-aware read: rewriting a file with pending merge-on-read
-    # position deletes must not resurrect the deleted rows
+    # position deletes (committed or staged by this batch) must not
+    # resurrect the deleted rows
     lineage = table.row_lineage
     old = (
-        table.read_files(spark, touched_abs, with_row_ids=lineage)
+        table.read_files(
+            spark, touched_abs, with_row_ids=lineage,
+            staged_deletes=[
+                d for d in staged_deletes or ()
+                if set(d["refs"]) & set(touched_rel)
+            ],
+        )
         .withColumn("__tgt", F.lit(1))
         .alias("t")
     )
@@ -567,12 +580,7 @@ def _merge_into_cow(
     added = table._write_files(
         result, size_hint_bytes=touched_bytes + (src_bytes or 0)
     )
-    return table.commit(
-        added,
-        removed_paths=touched_rel,
-        operation="merge",
-        extra_summary={"matched_files": len(touched_rel), **(extra_summary or {})},
-    )
+    return commit(added, touched_rel)
 
 
 def _observed_rows(obs, src: DataFrame) -> int | None:
@@ -594,38 +602,47 @@ def _observed_rows(obs, src: DataFrame) -> int | None:
             return None
 
 
-def source_key_stats(
-    src: DataFrame, keys: list[str]
-) -> tuple[list[Predicate], int]:
-    """ONE fused aggregate over a merge/delete source: row count plus —
-    when the key is single, orderable and NULL-free in this batch — the
-    min/max manifest-pruning predicate pair. Shared by merge_into-style
-    callers (cdc_apply's MOR delete probe) so the pruning contract
-    (rangeable dtypes, NULL-key pruning disable) lives in one place."""
+def key_stat_aggs(src: DataFrame, keys: list[str], where=None, tag: str = "") -> list:
+    """Aggregates over a merge source: its row count and, when the key
+    is single and orderable, its min/max plus a NULL-key flag (min/max
+    skip NULLs, so one NULL key must disable range pruning, or the file
+    holding the NULL-key target row is skipped). ``where`` restricts
+    them to a slice of ``src`` and ``tag`` suffixes their names, so one
+    collect can size several sources (cdc_apply's upserts and deletes).
+    Read the collected row back with ``key_stats_of``."""
+    def sel(c):
+        return c if where is None else F.when(where, c)
+
+    aggs = [F.count(sel(F.lit(1))).alias(f"__n{tag}")]
     range_key = _rangeable_key(src, keys)
-    aggs = [F.count(F.lit(1)).alias("__n")]
     if range_key:
+        k = F.col(range_key)
         aggs += [
-            F.min(range_key).alias("__lo"),
-            F.max(range_key).alias("__hi"),
-            F.max(
-                F.when(F.col(range_key).isNull(), 1).otherwise(0)
-            ).alias("__nrk"),
+            F.min(sel(k)).alias(f"__lo{tag}"),
+            F.max(sel(k)).alias(f"__hi{tag}"),
+            F.max(sel(F.when(k.isNull(), 1).otherwise(0))).alias(f"__nrk{tag}"),
         ]
-    s = src.agg(*aggs).collect()[0]
-    preds: list[Predicate] = []
-    if range_key and s["__lo"] is not None and not s["__nrk"]:
-        preds = [
-            Predicate(range_key, ">=", s["__lo"]),
-            Predicate(range_key, "<=", s["__hi"]),
+    return aggs
+
+
+def key_stats_of(
+    row, src: DataFrame, keys: list[str], tag: str = ""
+) -> tuple[int, list[Predicate]]:
+    """``(row count, manifest-pruning predicates)`` from a row holding
+    ``key_stat_aggs`` — the ``source_stats`` shape of ``merge_into``."""
+    n = int(row[f"__n{tag}"] or 0)
+    range_key = _rangeable_key(src, keys)
+    if range_key and row[f"__lo{tag}"] is not None and not row[f"__nrk{tag}"]:
+        return n, [
+            Predicate(range_key, ">=", row[f"__lo{tag}"]),
+            Predicate(range_key, "<=", row[f"__hi{tag}"]),
         ]
-    return preds, int(s["__n"])
+    return n, []
 
 
 def _rangeable_key(src: DataFrame, keys: list[str]) -> str | None:
     """The single orderable key whose min/max buys manifest file skipping
-    on the target (None when keys are composite or unordered). The
-    min/max itself rides along in merge_into's fused source aggregate."""
+    on the target (None when keys are composite or unordered)."""
     if len(keys) != 1:
         return None
     k = keys[0]

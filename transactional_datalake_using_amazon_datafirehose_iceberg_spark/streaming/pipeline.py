@@ -103,11 +103,14 @@ class CdcStreamPipeline:
         carries the watermark forward across later compaction/DML
         commits so the replay guard survives table maintenance.
 
-        The micro-batch is cached first: the dead-letter write and the
-        MERGE's two passes (touched-file semi-join + rewrite) would
-        otherwise re-read the source three times — 3x read amplification
-        per delivery buffer at scale (observed via the delivery log:
-        numInputRows was 3x the batch size before caching)."""
+        One buffer publishes ONE target snapshot: upserts, merge-on-read
+        position deletes and the watermark commit together, so a reader
+        never sees half a buffer (the dead-letter table has its own
+        commit, and the delete-file upkeep below its own snapshot). The
+        micro-batch is cached first: the dead-letter write
+        and the apply's passes over it would otherwise each re-read the
+        source (observed via the delivery log: numInputRows was 3x the
+        batch size before caching)."""
         hwm = self._last_applied_batch()
         if self.app_id == "default" and 0 <= batch_id < hwm:
             # anonymous pipelines share the implicit app: a far-regressed
